@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..models.registry import Model, ModelContext, ModelRegistry
@@ -168,22 +168,25 @@ class WarehouseRunner:
         elif m.kind == "INCREMENTAL_BY_TIME_RANGE":
             assert m.time_column, f"{m.name}: incremental model needs time_column"
             path = self._table_path(m)
+            # row metric piggybacks on the write job, as in the TABLE
+            # branch. Every incremental builder filters its time column
+            # to [start_ds, end_ds], so the rows written are exactly the
+            # interval's rows — no read-back count scan.
+            obs = Observation()
             (
-                df.write.mode("overwrite")
+                df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .option("compression", "zstd")
                 .partitionBy(m.time_column)
                 .parquet(path)
             )
+            rows = obs.get["rows"]
             # read back with the plan's schema: an interval with ZERO
             # rows (routine in daily backfills) writes no part files,
             # and a schema-less read of the empty dataset fails with
             # UNABLE_TO_INFER_SCHEMA
-            out = self.spark.read.schema(df.schema).parquet(path)
-            rows = out.filter(
-                F.col(m.time_column).between(ctx.start_ds, ctx.end_ds)
-            ).count()
-            self._cache[m.name] = out
+            self._cache[m.name] = self.spark.read.schema(df.schema).parquet(path)
         elif m.kind == "SNAPSHOT_TABLE":
             # versioned TABLE: each run commits a snapshot version —
             # history/rollback via engine.snapshots (CLI `snapshots`);
@@ -197,8 +200,6 @@ class WarehouseRunner:
             rows = snap.n_rows
             self._cache[m.name] = table.read(self.spark)
         else:  # TABLE
-            from pyspark.sql import Observation
-
             path = self._table_path(m)
             # row metric piggybacks on the write job (df.observe) — no
             # second count scan over what was just written

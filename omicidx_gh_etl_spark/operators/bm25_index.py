@@ -139,8 +139,8 @@ class Bm25Index:
         Measured at the bench shape (2M docs, 256 buckets, interleaved
         A/B): build 35.1 s → 30.6 s first pass, 56.2 s → 27.5 s second
         pass (contended window), with all three table hashes and the
-        serve output identical (tools/r11_bm25_build_ab.py;
-        tests pin serve equivalence)."""
+        serve output identical (OPTIMIZATION_r11.md, "Bm25Index.build —
+        single-tokenize restructure"; tests pin serve equivalence)."""
         for t in (self.postings_table, self.dfreq_table, self.stats_table):
             _drop_table_and_location(self.spark, t)
         toks = tokens_sql(f"coalesce(`{text_col}`, '')")

@@ -14,8 +14,8 @@ pure-expression plan, output pinned identical).
                                self-join (no O(n²) cross join)
 - ``minhash_lsh_candidates`` — MinHash signatures + LSH banding
 - ``simhash``                — per-document SimHash fingerprint
-- ``connected_components``   — min-label propagation (O(diameter) rounds)
-- ``connected_components_star`` — large-star/small-star contraction
+- ``connected_components_star`` — near-dup pair edges → components via
+                               large-star/small-star contraction
                                (O(log² n) rounds on any topology)
 - ``latest_by_key``          — window dedup (the reference's documented gap:
                                "deduplicate by accession + update timestamp",
@@ -970,11 +970,11 @@ def simhash_band_pairs(
     )
 
 
-def connected_components(
+def connected_components_star(
     pairs: DataFrame,
     a_col: str = "d1",
     b_col: str = "d2",
-    max_iter: int = 25,
+    max_iter: int = 20,
 ) -> DataFrame:
     """Cluster near-dup pair edges into connected components →
     (node, component) with component = min node id reachable.
@@ -983,74 +983,19 @@ def connected_components(
     pipeline: near-dup pairs (from MinHash/SimHash) chain into groups
     (A~B, B~C ⇒ {A,B,C}), and one keeper per component survives.
 
-    Iterative min-label propagation (the simple variant of
-    Kiveris et al.'s large-star/small-star): each round every node
-    takes the min of its own and its neighbors' labels — a join on the
-    (symmetrized) edge list plus a min-aggregate, both shuffling on
-    uniformly-hashed node ids. Rounds needed = graph diameter, and
-    near-dup components are small and dense (diameter ≲ 3), so this
-    converges in a handful of rounds at any corpus size; each round's
-    result is ``localCheckpoint``-ed to truncate the growing lineage
-    (standard practice for iterative DataFrame algorithms).
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014). Plain
+    min-label propagation needs O(diameter) rounds — fine for dense
+    near-dup clusters but adversarial on chain-shaped graphs (URL
+    redirect chains, citation paths), where a 10⁶-node path needs 10⁶
+    rounds. Star contraction halves path lengths every alternation,
+    converging in O(log² n) rounds on ANY topology.
 
-    Driver-side iteration with a per-round convergence count is
-    inherent to fixpoint algorithms — the per-round work is fully
-    distributed.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .union(pairs.select(F.col(b_col).alias("a"), F.col(a_col).alias("b")))
-        .distinct()
-    )
-    labels = edges.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy(edges["a"].alias("node"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "d1",
-    b_col: str = "d2",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) → (node, component) with component = min node id, the
-    same contract as :func:`connected_components`.
-
-    Why a second implementation: plain min-label propagation needs
-    O(diameter) rounds — fine for dense near-dup clusters (diameter
-    ≲ 3) but adversarial on chain-shaped graphs (URL redirect chains,
-    citation paths), where a 10⁶-node path needs 10⁶ rounds. Star
-    contraction halves path lengths every alternation, converging in
-    O(log² n) rounds on ANY topology, so this is the scale-safe
-    default when the edge graph's shape is unknown.
+    Input contract: a node appears in the output iff it has an edge to
+    a DIFFERENT node. Self-loop edges are dropped, so a node whose only
+    edge is ``(x, x)`` is absent rather than a singleton component;
+    LSH candidate pairs are always ``d1 < d2``, so no caller passes
+    one. An empty edge list yields an empty frame.
 
     Each phase is one groupBy(min) + one equi-join re-emit, shuffling
     on node ids (content hashes here — uniform, skew-free). Rounds are

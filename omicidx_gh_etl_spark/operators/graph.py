@@ -15,7 +15,7 @@ is ALREADY hash-partitioned on the node id by the previous round's
 aggregate, so Spark reuses the exchange instead of re-shuffling it.
 Per-round lineage is truncated with ``localCheckpoint`` every
 ``checkpoint_interval`` rounds (the standard iterative-DataFrame
-practice, same as ``connected_components``). Nothing is collected;
+practice, same as ``dedup.connected_components_star``). Nothing is collected;
 the node count enters the expressions as a broadcast 1-row aggregate.
 
 Determinism contract: the iteration runs on ranks NORMALIZED to the

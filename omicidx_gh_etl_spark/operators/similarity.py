@@ -3,7 +3,12 @@
 - ``cosine_sim_expr``  — JVM-side cosine between two array<double> cols
                          (zip_with product + aggregate sum; no UDF)
 - ``cosine_topk``      — brute-force top-k against one query vector
-                         (the exactness baseline)
+                         (the exactness baseline): ``engine="sql"``
+                         expression cosine, or ``engine="arrow"``
+                         batched numpy gemv; bit-identical rows
+- ``pack_vector_blocks`` / ``cosine_topk_blocks`` — the same exact
+                         top-k over fixed-width f32 blocks packed once
+                         at ingest (the transfer-optimal scan layout)
 - ``cosine_pairs``     — all-pairs above a threshold (small-n exactness
                          baseline; quadratic — never the scale path)
 - ``ivf_assign``       — IVF cell assignment: nearest centroid per
@@ -67,13 +72,6 @@ _FOLD_MAX_CENTROIDS = 1024
 # map's per-row value copy loses to the broadcast hash join — see
 # _probe_inline_sql's crossover measurement
 _PROBE_INLINE_MAX_ENTRIES = 64
-# unrolled-cosine dims cap: the straight-line form emits ~2 codegen
-# expressions per dimension TWICE (dot + self-dot); past the cap the
-# generated method risks the JVM's 64 KB method-size codegen fallback
-# and plan-build/constant-folding blowup — the same failure family as
-# the 26.7 s per-element-cast note in _unrolled_query_cos_sql's
-# docstring. See the r11 measurement in OPTIMIZATION_r11.md.
-_UNROLL_MAX_DIMS = 256
 
 
 def _centroid_fold_sql(
@@ -322,69 +320,6 @@ def _cos_pre_sql(a: str, b: str, anorm: str, bnorm: str) -> str:
     return f"({_dot_sql(a, b)} / ({anorm} * {bnorm}))"
 
 
-def _unrolled_query_cos_sql(qvd: list, vec: str = "v") -> str | None:
-    """Literal-query cosine as STRAIGHT-LINE codegen arithmetic: the
-    1-row query vector is collected at plan time (the same
-    driver-materialized bound the sql engine's broadcast imposes) and
-    the dot/norm folds are UNROLLED into ``dims`` explicit
-    multiply-adds with the query components inlined as double
-    literals. ``zip_with``/``aggregate`` are ``HigherOrderFunction``s
-    — CodegenFallback, an interpreted lambda call per element — so the
-    sql engine pays ~3 interpreted lambda evals per dimension per row;
-    the unrolled form whole-stage-codegens to a branch-free chain of
-    loads and fmas (measured 10M×64, min-of-3 same-window: 6.16 s fold
-    → 2.00 s unrolled — the best ROW-layout engine; the BLOCK layout's
-    frombuffer-gemv kernel still wins at 1.37 s because 2048 packed
-    vectors share one JVM row, vs a 512 B array alloc per vector
-    here. Keep the whole-array cast: a per-element
-    ``cast(v[i] as double)`` variant measured 26.7 s — the doubled
-    expression count trips codegen into an interpreted path).
-
-    Bit-identical by construction: the additions keep the fold's exact
-    left-to-right IEEE order from a 0.0 accumulator; literal doubles
-    round-trip exactly (repr is shortest-exact); the query norm is
-    folded in Python over the same doubles (the
-    :func:`_centroid_fold_sql` argument). A ``size() = dims`` guard
-    keeps every non-conforming row — NULL vector (size → NULL), ragged
-    shorter/longer (zip_with's NULL padding ⇒ NULL cosine) — on the
-    original fold expression, so degenerate corpora are untouched.
-    Returns ``None`` (caller falls back to the fold engine) when the
-    query itself is degenerate: empty, a NULL element (every cosine
-    would be NULL anyway) or a non-finite component (unprintable as a
-    SQL literal).
-    """
-    import math
-
-    if not qvd or any(x is None or not math.isfinite(x) for x in qvd):
-        return None
-    if len(qvd) > _UNROLL_MAX_DIMS:
-        # mirror the module's other literal-inliner size guards
-        # (_FOLD_MAX_CENTROIDS, _PROBE_INLINE_MAX_ENTRIES): a
-        # high-dimensional query would unroll into thousands of
-        # multiply-add terms twice — fall back to the fold engine
-        return None
-    dims = len(qvd)
-    qacc = 0.0
-    for x in qvd:
-        qacc += float(x) * float(x)
-    qn = repr(math.sqrt(qacc)) + "D"
-    prods = " + ".join(
-        f"({vec}[{i}] * {repr(float(qvd[i]))}D)" for i in range(dims)
-    )
-    sq = " + ".join(f"({vec}[{i}] * {vec}[{i}])" for i in range(dims))
-    unrolled = (
-        f"((cast(0.0 as double) + {prods}) / "
-        f"(sqrt(cast(0.0 as double) + {sq}) * {qn}))"
-    )
-    qv_lit = "array(" + ",".join(
-        repr(float(x)) + "D" for x in qvd
-    ) + ")"
-    fold = _cos_pre_sql(vec, qv_lit, _norm_sql(vec), qn)
-    return (
-        f"CASE WHEN size({vec}) = {dims} THEN {unrolled} ELSE {fold} END"
-    )
-
-
 def cosine_topk(
     emb: DataFrame,
     query: DataFrame,
@@ -414,43 +349,12 @@ def cosine_topk(
     is ``ivf_search``/``ann_index`` — this is the exact ground-truth
     pass that evals and index builds are judged against.
     """
-    if engine not in ("sql", "arrow", "packed", "codegen"):
-        raise ValueError(
-            "engine must be 'sql', 'arrow', 'packed' or 'codegen', "
-            f"got {engine!r}"
-        )
+    if engine not in ("sql", "arrow"):
+        raise ValueError(f"engine must be 'sql' or 'arrow', got {engine!r}")
     if engine == "arrow":
         return _cosine_topk_arrow(
             emb, query, k, id_col, vec_col, query_vec_col
         )
-    if engine == "packed":
-        return _cosine_topk_packed(
-            emb, query, k, id_col, vec_col, query_vec_col
-        )
-    if engine == "codegen":
-        # literal-query unrolled expression (see _unrolled_query_cos_sql)
-        # — JVM-only, no Python boundary, no HOF interpretation. The
-        # query is collected at plan time like the arrow engine does.
-        qrows = query.selectExpr(
-            f"cast(`{query_vec_col}` as array<double>) AS qv"
-        ).head(2)
-        if len(qrows) != 1:
-            raise ValueError("query must have exactly one row")
-        cos_sql = (
-            None if qrows[0]["qv"] is None
-            else _unrolled_query_cos_sql(list(qrows[0]["qv"]))
-        )
-        if cos_sql is not None:
-            e = emb.selectExpr(
-                f"`{id_col}`", f"cast(`{vec_col}` as array<double>) AS v"
-            )
-            return (
-                e.selectExpr(id_col, f"round({cos_sql}, 4) AS cos_sim")
-                .orderBy(F.desc("cos_sim"), F.asc(id_col))
-                .limit(k)
-            )
-        # degenerate query (empty / NULL / non-finite component):
-        # fall through to the fold engine, whose crossJoin handles it
     # Assembled with selectExpr/string filters, not Column chains: each
     # Column op is a py4j round trip + a JVM analyzer pass, and this
     # profiled at ~0.17 s/plan in Column form (plans identical).
@@ -485,19 +389,14 @@ def _uniform_lengths(vecs, dims: int) -> bool:
     return lo == hi == dims
 
 
-def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
-                       norms_nat=None):
-    """Shared per-batch exact top-k kernel for the arrow/packed engines:
-    native-dtype gemv pre-selection (margin-padded pool — see the error
-    bound in :func:`_cosine_topk_arrow`), float64 rescore of the pool
-    with Spark's decimal HALF_UP rounding, (cos desc, id asc) local
-    order, and the sql engine's null-cosine padding for degenerate
-    corpora. Returns ``(ids list, cos list)`` of ≤ k rows.
-    ``norms_nat`` (per-row f32 norms precomputed at ingest — the
-    blocks layout can carry them) skips the einsum norm pass, saving
-    one full read of the batch matrix; the f64 rescore recomputes
-    exact norms for the pool either way, so the result is unchanged
-    (the margin bound already covers f32 norm error)."""
+def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3):
+    """Shared per-batch exact top-k kernel for the arrow engine and the
+    block-layout scan (:func:`cosine_topk_blocks`): native-dtype gemv
+    pre-selection (margin-padded pool — see the error bound in
+    :func:`_cosine_topk_arrow`), float64 rescore of the pool with
+    Spark's decimal HALF_UP rounding, (cos desc, id asc) local order,
+    and the sql engine's null-cosine padding for degenerate corpora.
+    Returns ``(ids list, cos list)`` of ≤ k rows."""
     import numpy as np
 
     n = arr.shape[0]
@@ -505,11 +404,7 @@ def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
     if n > kk:
         q_nat = qv.astype(arr.dtype, copy=False)
         d_nat = arr @ q_nat
-        n2 = (
-            norms_nat.astype(d_nat.dtype, copy=False) ** 2
-            if norms_nat is not None
-            else np.einsum("ij,ij->i", arr, arr)
-        )
+        n2 = np.einsum("ij,ij->i", arr, arr)
         with np.errstate(divide="ignore", invalid="ignore"):
             cos_nat = d_nat / np.sqrt(n2 * (qn * qn))
         # zero-norm rows are NULL-cosine in the sql engine and sort
@@ -636,204 +531,21 @@ def _cosine_topk_arrow(
     )
 
 
-def pack_vectors(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "emb_f32",
-    dims: int | None = None,
-) -> DataFrame:
-    """One-time ingest transform: ``array<float|double>`` → fixed-width
-    little-endian float32 blob (``binary``), the storage layout the
-    ``engine="packed"`` brute-force scan reads.
-
-    Why: Spark's JVM→Arrow producer writes a ``list<double>`` column
-    element-by-element (per-element offsets bookkeeping + a validity
-    walk); for a fixed-dim vector that bookkeeping IS the measured
-    bottleneck of the brute-force kernel (~2 s of a 3 s 10M×64 scan —
-    the in-kernel gemv is ~0.3 s). A binary blob ships as one
-    ``System.arraycopy`` per row and one contiguous data buffer per
-    batch, which ``np.frombuffer`` reinterprets with zero copies. At
-    100 TB this is the difference between an Arrow transcode of the
-    whole corpus and a straight buffer hand-off — choose the layout
-    once at ingest, every downstream scan inherits it.
-
-    The packing itself is vectorized: one ``astype('<f4')`` of the
-    batch's flattened values + an offsets arange, reassembled with
-    ``pa.Array.from_buffers`` — no per-row Python. Rows that are NULL
-    or ragged (wrong length) become NULL blobs.
-    """
-    if dims is None:
-        probe = df.select(F.col(vec_col)).filter(
-            F.col(vec_col).isNotNull()
-        ).first()
-        if probe is None:
-            raise ValueError(f"cannot infer dims: {vec_col} is all-null")
-        dims = len(probe[0])
-    nbytes = 4 * int(dims)
-    id_field = df.schema[id_col]
-
-    def _pack(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            if vecs.null_count == 0 and _uniform_lengths(vecs, dims):
-                f32 = np.ascontiguousarray(flat, dtype="<f4")
-                offs = (np.arange(n + 1, dtype=np.int32) * nbytes)
-                packed = pa.Array.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(offs.tobytes()),
-                     pa.py_buffer(f32.tobytes())],
-                )
-            else:  # ragged/null rows: per-row fallback, NULL them out
-                packed = pa.array(
-                    [
-                        np.asarray(v, dtype="<f4").tobytes()
-                        if v is not None and len(v) == dims else None
-                        for v in vecs.to_pylist()
-                    ],
-                    type=pa.binary(),
-                )
-            yield pa.record_batch(
-                [ids, packed], names=[id_col, out_col]
-            )
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField(out_col, BinaryType(), True),
-    ])
-    return df.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _pack, out_schema
-    )
-
-
-def _cosine_topk_packed(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """Packed-binary engine for :func:`cosine_topk`: ``vec_col`` holds
-    fixed-width little-endian float32 blobs (see :func:`pack_vectors`).
-
-    Each Arrow batch arrives as ONE contiguous data buffer + a byte-
-    offsets array — ``np.frombuffer(...).reshape(n, dims)`` is a
-    zero-copy reinterpretation, so the scan cost is gemv + buffer
-    hand-off with none of the ``list<double>`` per-element Arrow
-    bookkeeping the plain arrow engine pays. Scoring is the shared
-    exact kernel (:func:`_batch_topk_scores`): float32 gemv
-    pre-selection with a margin-padded pool, float64 rescore, HALF_UP
-    rounding — float32→float64 is exact, so the result is bit-identical
-    to the sql engine reading the unpacked ``array<float>`` column
-    (pytest-pinned). Blobs that are NULL or mis-sized rank as
-    null-cosine rows, matching the sql engine's zero-norm handling.
-    """
-    import numpy as np
-
-    qrows = query.select(F.col(query_vec_col).alias("qv")).head(2)
-    if len(qrows) != 1:
-        raise ValueError("query must have exactly one row")
-    qv = np.asarray(qrows[0]["qv"], dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-    dims = qv.size
-    nbytes = 4 * int(dims)
-    kk = int(k)
-    id_field = emb.schema[id_col]
-
-    def _packed_batches(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            arr = None
-            if vecs.null_count == 0:
-                # Binary arrays carry BYTE offsets (int32; int64 for
-                # large_binary) into one contiguous data buffer. A
-                # uniform-stride offsets run means the whole batch is
-                # already the row-major matrix — frombuffer + reshape,
-                # zero copies, no per-element walk.
-                bufs = vecs.buffers()
-                odt = (
-                    np.int64
-                    if pa.types.is_large_binary(vecs.type) else np.int32
-                )
-                offs = np.frombuffer(bufs[1], dtype=odt)[
-                    vecs.offset : vecs.offset + n + 1
-                ]
-                if offs[-1] - offs[0] == n * nbytes and bool(
-                    np.all(np.diff(offs) == nbytes)
-                ):
-                    arr = np.frombuffer(
-                        bufs[2], dtype="<f4",
-                        offset=int(offs[0]), count=n * dims,
-                    ).reshape(n, dims)
-            if arr is None:  # null/ragged blobs: per-row fallback
-                arr = np.array(
-                    [
-                        np.frombuffer(v, dtype="<f4").astype(np.float64)
-                        if v is not None and len(v) == nbytes
-                        else np.full(dims, np.nan)
-                        for v in vecs.to_pylist()
-                    ]
-                )
-            idn_all = np.asarray(ids.to_numpy(zero_copy_only=False))
-            out_ids, out_cos = _batch_topk_scores(
-                arr, idn_all, qv, qn, kk
-            )
-            yield pa.record_batch(
-                [pa.array(out_ids), pa.array(out_cos, type=pa.float64())],
-                names=[id_col, "cos_sim"],
-            )
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField("cos_sim", DoubleType(), True),
-    ])
-    return (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .mapInArrow(_packed_batches, out_schema)
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(kk)
-    )
-
-
 def pack_vector_blocks(
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dims: int | None = None,
     block_rows: int = 1024,
-    with_norms: bool = False,
 ) -> DataFrame:
     """Ingest transform to the BLOCK layout: ``(n, ids, vecs)`` rows
     where ``vecs`` is ``n × dims`` float32 row-major bytes and ``ids``
     the matching ``n`` little-endian int64 ids — up to ``block_rows``
     vectors per row.
 
-    Why a second packed layout: even with per-vector f32 blobs
-    (:func:`pack_vectors`) the JVM→Python transfer pays a per-ROW cost
-    (offsets bookkeeping, 10 M socket frames for 10 M vectors —
+    Why blocks: with one vector per row the JVM→Python transfer pays a
+    per-ROW cost (offsets bookkeeping, 10 M socket frames for 10 M
+    vectors —
     measured ~2.4 s of a 10M×64 scan whose gemv is ~0.3 s). Blocks
     amortize that over ``block_rows`` vectors: ~10 k rows ship the
     same 2.5 GB as one contiguous buffer stream, and the scan kernel
@@ -847,12 +559,6 @@ def pack_vector_blocks(
     Ingest validation (NOT silent): NULL or wrong-width vectors raise —
     the block layout stores exactly-``dims`` vectors by contract; clean
     them upstream (the per-row engines handle degenerate rows instead).
-
-    ``with_norms=True`` packs a third blob of per-vector f32 norms
-    (computed once at ingest, like FAISS stores norms alongside
-    codes): the scan kernel then skips its per-batch einsum norm
-    pass — one fewer full read of the matrix — with results unchanged
-    (the exact float64 rescore recomputes pool norms either way).
     """
     if dims is None:
         probe = df.select(F.col(vec_col)).filter(
@@ -891,43 +597,30 @@ def pack_vector_blocks(
             idn = np.ascontiguousarray(
                 ids.to_numpy(zero_copy_only=False), dtype="<i8"
             )
-            nrm = (
-                np.sqrt((mat.astype("<f4") ** 2).sum(axis=1, dtype="<f4"))
-                .astype("<f4")
-                if with_norms else None
-            )
             outs = []
             for lo in range(0, n, br):
                 hi = min(lo + br, n)
-                row = [hi - lo, idn[lo:hi].tobytes(), mat[lo:hi].tobytes()]
-                if with_norms:
-                    row.append(nrm[lo:hi].tobytes())
-                outs.append(row)
-            cols = [
-                pa.array([o[0] for o in outs], type=pa.int32()),
-                pa.array([o[1] for o in outs], type=pa.binary()),
-                pa.array([o[2] for o in outs], type=pa.binary()),
-            ]
-            names = ["n", "ids", "vecs"]
-            if with_norms:
-                cols.append(
-                    pa.array([o[3] for o in outs], type=pa.binary())
+                outs.append(
+                    (hi - lo, idn[lo:hi].tobytes(), mat[lo:hi].tobytes())
                 )
-                names.append("norms")
-            yield pa.record_batch(cols, names=names)
+            yield pa.record_batch(
+                [
+                    pa.array([o[0] for o in outs], type=pa.int32()),
+                    pa.array([o[1] for o in outs], type=pa.binary()),
+                    pa.array([o[2] for o in outs], type=pa.binary()),
+                ],
+                names=["n", "ids", "vecs"],
+            )
 
     from pyspark.sql.types import (
         BinaryType, IntegerType, StructField, StructType,
     )
 
-    fields = [
+    out_schema = StructType([
         StructField("n", IntegerType(), False),
         StructField("ids", BinaryType(), False),
         StructField("vecs", BinaryType(), False),
-    ]
-    if with_norms:
-        fields.append(StructField("norms", BinaryType(), False))
-    out_schema = StructType(fields)
+    ])
     return df.select(F.col(id_col), F.col(vec_col)).mapInArrow(
         _pack, out_schema
     )
@@ -943,7 +636,6 @@ def cosine_topk_blocks(
     query_vec_col: str = "qv",
     id_scale: int = 1,
     id_offset_col: str | None = None,
-    norms_col: str | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k over the BLOCK layout
     (:func:`pack_vector_blocks`) — the transfer-optimal exact scan.
@@ -985,12 +677,8 @@ def cosine_topk_blocks(
     scale = int(id_scale)
 
     cols = [F.col(ids_col), F.col(vecs_col)]
-    has_norms = norms_col is not None
-    if has_norms:
-        cols.append(F.col(norms_col))
     if id_offset_col is not None:
         cols.append(F.col(id_offset_col).cast("long").alias("__off"))
-    off_idx = 2 + (1 if has_norms else 0)
 
     def _scan(batches):
         import pyarrow as pa
@@ -1018,18 +706,13 @@ def cosine_topk_blocks(
             _voff, flat_v = _flat(b.column(1), "<f4", 4)
             nv = flat_v.size // dd
             arr = flat_v.reshape(nv, dd)
-            norms_nat = None
-            if has_norms:
-                _noff, norms_nat = _flat(b.column(2), "<f4", 4)
             if scale != 1:
                 idn = idn * scale
-            if len(b.columns) > off_idx:
-                offs = b.column(off_idx).to_numpy(zero_copy_only=False)
+            if len(b.columns) > 2:
+                offs = b.column(2).to_numpy(zero_copy_only=False)
                 per_block = np.diff(ioff) // 8
                 idn = idn + np.repeat(offs, per_block)
-            out_ids, out_cos = _batch_topk_scores(
-                arr, idn, qv, qn, kk, norms_nat=norms_nat
-            )
+            out_ids, out_cos = _batch_topk_scores(arr, idn, qv, qn, kk)
             yield pa.record_batch(
                 [
                     pa.array(out_ids, type=pa.int64()),

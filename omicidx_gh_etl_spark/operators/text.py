@@ -1104,8 +1104,9 @@ def bm25_serve(
     )
     # Catalyst's default 2-exchange tail, NOT _rank_scored_tail (r11,
     # measured): the single-exchange tail was a wash here (interleaved
-    # min-of-5 at 500k docs x 20 queries: 1.293 s vs 1.270 s,
-    # tools/r11_batch_topk_tail_ab.py) because the one-shot path is
+    # min-of-5 at 500k docs x 20 queries: 1.293 s vs 1.270 s;
+    # OPTIMIZATION_r11.md, "bm25_batch_topk / bm25_serve (one-shot) —
+    # 1-exchange tail") because the one-shot path is
     # tokenize-scan-bound — and unlike the serve path its contrib
     # stream is corpus-scan-sized, so repartition(q_id) would cap the
     # aggregate's parallelism at the batch's distinct-query count and
@@ -1380,5 +1381,6 @@ def bm25_batch_topk(
     # default 2-exchange tail, same rationale as bm25_serve above: the
     # one-shot contrib stream is corpus-scan-sized, so the 1-exchange
     # tail's q_id-bounded parallelism is the wrong trade here
-    # (measured a wash at the bench shape; tools/r11_batch_topk_tail_ab.py)
+    # (measured a wash at the bench shape; OPTIMIZATION_r11.md,
+    # "bm25_batch_topk / bm25_serve (one-shot) — 1-exchange tail")
     return _default_rank_tail(contrib, id_col, k)

@@ -275,15 +275,17 @@ FROM reach GROUP BY a
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: connected components over the MinHash LSH
-    pair edges via iterative min-label propagation (A~B, B~C ⇒ one
-    component labeled min(doc_id)) — the keeper-selection step of a
-    production dedup pipeline. The oracle computes the same components
-    with a recursive transitive-closure CTE (exact on the small
-    near-dup graphs; the Spark side scales to corpus-size graphs)."""
+    pair edges via alternating large-star/small-star contraction (A~B,
+    B~C ⇒ one component labeled min(doc_id)) — the keeper-selection
+    step of a production dedup pipeline. Star contraction (Kiveris et
+    al., SoCC 2014) needs O(log² n) rounds on any graph topology. The
+    oracle computes the same components with a recursive
+    transitive-closure CTE (exact on the small near-dup graphs; the
+    Spark side scales to corpus-size graphs)."""
     d = load_spread(spark, sf_dir, "documents", "doc_id")
     sh = dedup.shingles(d, "text", "doc_id", n=3, distinct=False)
     pairs = dedup.minhash_lsh_candidates(sh, "doc_id", num_hashes=12, bands=4)
-    return dedup.connected_components(pairs)
+    return dedup.connected_components_star(pairs)
 
 
 @register(
@@ -431,42 +433,6 @@ def text_remove_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_spread(spark, sf_dir, "documents", "doc_id")
     seg = text.segment_token_windows(d, "text", "doc_id", window=10)
     return text.remove_boilerplate_segments(seg, "doc_id", min_docs=3)
-
-
-@register(
-    "dedup_components_star",
-    _SHINGLE_CTE
-    + _MINHASH_BANDS_CTE
-    + """,
-pairs AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
-edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-          UNION SELECT d2, d1 FROM pairs),
-reach AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM edges
-    UNION
-    SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a)
-  SELECT * FROM r)
-SELECT a AS node, least(a, min(b)) AS component
-FROM reach GROUP BY a
-    """,
-    tags=("dedup", "iterative"),
-)
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters via alternating large-star/small-star
-    contraction (Kiveris et al. 2014) over the same MinHash LSH edges
-    as ``dedup_components`` — identical output contract (node →
-    min-id component), O(log² n) rounds on ANY graph topology where
-    label propagation needs O(diameter). The scale-safe default when
-    the candidate graph may contain long chains rather than dense
-    near-dup clusters. Oracle: recursive transitive-closure CTE."""
-    d = load_spread(spark, sf_dir, "documents", "doc_id")
-    sh = dedup.shingles(d, "text", "doc_id", n=3, distinct=False)
-    pairs = dedup.minhash_lsh_candidates(sh, "doc_id", num_hashes=12, bands=4)
-    return dedup.connected_components_star(pairs)
 
 
 @register(
@@ -2224,7 +2190,7 @@ def dedup_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_spread(spark, sf_dir, "documents", "doc_id")
     sh = dedup.shingles(d, "text", "doc_id", n=3, distinct=False)
     pairs = dedup.minhash_lsh_candidates(sh, "doc_id", num_hashes=12, bands=4)
-    comps = dedup.connected_components(pairs)
+    comps = dedup.connected_components_star(pairs)
     t = F.expr("filter(split(text, ' '), x -> x != '')")
     q = d.select(
         "doc_id",

@@ -155,7 +155,7 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_spread(spark, sf_dir, "documents", "doc_id")
     sh = dedup.shingles(d, "text", "doc_id", n=3, distinct=False)
     pairs = dedup.minhash_lsh_candidates(sh, "doc_id", num_hashes=12, bands=4)
-    comp = dedup.connected_components(pairs)
+    comp = dedup.connected_components_star(pairs)
     rep = F.coalesce(F.col("component"), F.col("doc_id"))
     return (
         d.select("doc_id")

@@ -326,21 +326,6 @@ def test_bloom_num_hashes_bounds():
     assert "shiftleft" in mask
 
 
-def test_unrolled_cosine_dims_cap():
-    """r10 advice: the straight-line codegen cosine must bound its
-    generated SQL like the module's other literal inliners — above
-    _UNROLL_MAX_DIMS it returns None and the caller keeps the fold
-    engine (JVM codegen method-size / plan-build blowup risk)."""
-    from omicidx_gh_etl_spark.operators.similarity import (
-        _UNROLL_MAX_DIMS,
-        _unrolled_query_cos_sql,
-    )
-
-    at_cap = _unrolled_query_cos_sql([1.0] * _UNROLL_MAX_DIMS)
-    assert at_cap is not None and "CASE WHEN" in at_cap
-    assert _unrolled_query_cos_sql([1.0] * (_UNROLL_MAX_DIMS + 1)) is None
-
-
 def test_winnow_shared_passage_shares_fingerprint(spark):
     from omicidx_gh_etl_spark.operators import text as T
 
@@ -458,13 +443,21 @@ def test_langid_profile_argmax_and_und(spark):
 def test_connected_components_chains_and_islands(spark):
     from omicidx_gh_etl_spark.operators import dedup
 
+    def comps(edges):
+        pairs = spark.createDataFrame(edges, "d1 long, d2 long")
+        out = dedup.connected_components_star(pairs)
+        assert out.columns == ["node", "component"]
+        return {r["node"]: r["component"] for r in out.collect()}
+
     # chain 1-2-3-4 (diameter 3), pair {10,11}, pair {20,21}
-    pairs = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (10, 11), (21, 20)], "d1 long, d2 long"
-    )
-    out = {r["node"]: r["component"]
-           for r in dedup.connected_components(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    assert comps([(2, 1), (2, 3), (3, 4), (10, 11), (21, 20)]) == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20
+    }
+    # degenerate inputs: no edges, and a self-loop as the only edge
+    # (dropped by contract — the node has no edge to another node)
+    assert comps([]) == {}
+    assert comps([(5, 5)]) == {}
+    assert comps([(5, 5), (6, 5)]) == {5: 5, 6: 5}
 
 
 def test_repetition_stats_flags_loops(spark):
@@ -539,6 +532,8 @@ def test_remove_boilerplate_segments_newline_corpus(spark):
 def test_connected_components_star_matches_propagation(spark):
     from omicidx_gh_etl_spark.operators import dedup
 
+    # the labels min-label propagation produced on this graph: every
+    # node maps to the minimum id of its component
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11), (21, 20)], "d1 long, d2 long"
     )
@@ -570,11 +565,23 @@ def test_connected_components_star_random_equivalence(spark):
     rng = random.Random(7)
     edges = list({tuple(sorted(rng.sample(range(60), 2))) for _ in range(70)})
     pairs = spark.createDataFrame(edges, "d1 long, d2 long")
-    prop = {r["node"]: r["component"]
-            for r in dedup.connected_components(pairs, max_iter=60).collect()}
     star = {r["node"]: r["component"]
             for r in dedup.connected_components_star(pairs).collect()}
-    assert star == prop
+
+    # independent reference: union-find rooted at the component minimum
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    assert star == {x: find(x) for x in parent}
 
 
 def test_containment_catches_embedded_doc(spark):
@@ -1101,132 +1108,13 @@ def test_cosine_topk_engines_identical(spark, sf_dir):
     assert [tuple(r) for r in at] == [tuple(r) for r in bt]
 
     import pytest as _pytest
-    with _pytest.raises(ValueError):
-        similarity.cosine_topk(e, q, engine="duck")
+    # unknown names, including the deleted packed/codegen engines
+    for bad in ("duck", "packed", "codegen"):
+        with _pytest.raises(ValueError):
+            similarity.cosine_topk(e, q, engine=bad)
     with _pytest.raises(ValueError):
         similarity.cosine_topk(e, e.limit(2).selectExpr(
             "embedding AS qv"), engine="arrow").collect()
-
-
-def test_cosine_topk_packed_engine_identical(spark, sf_dir):
-    """The packed-f32-binary engine (pack_vectors → frombuffer gemv)
-    returns exactly the sql engine's rows on the same corpus —
-    float32→float64 is exact, so the blob layout changes transfer
-    cost only, never values. Null and ragged blobs rank as
-    null-cosine rows like the sql engine's zero-norm vectors."""
-    from omicidx_gh_etl_spark.operators import similarity
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    packed = similarity.pack_vectors(e, "embedding", "vec_id")
-    a = similarity.cosine_topk(e, q, k=10, engine="sql").collect()
-    c = similarity.cosine_topk(
-        packed, q, k=10, vec_col="emb_f32", engine="packed"
-    ).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-
-    # tie stress (replicated identical vectors, distinct ids)
-    ties = e.filter(F.col("vec_id") < 3).selectExpr(
-        "explode(sequence(0, 19)) AS r", "vec_id", "embedding"
-    ).selectExpr("vec_id * 20 + r AS vec_id", "embedding")
-    at = similarity.cosine_topk(ties, q, k=7, engine="sql").collect()
-    ct = similarity.cosine_topk(
-        similarity.pack_vectors(ties, "embedding", "vec_id"),
-        q, k=7, vec_col="emb_f32", engine="packed",
-    ).collect()
-    assert [tuple(r) for r in at] == [tuple(r) for r in ct]
-
-    # degenerate blobs: NULL and wrong-width rows must sort last
-    # (null cosine), exactly like the sql engine's null/zero vectors
-    weird = spark.createDataFrame(
-        [(1, bytearray(b"\x00" * 12)), (2, None)],
-        "vec_id long, emb_f32 binary",
-    )
-    some = packed.filter(F.col("vec_id") < 3).unionByName(weird.filter(
-        F.col("vec_id") < 0).unionByName(weird))
-    got = similarity.cosine_topk(
-        some, q, k=5, vec_col="emb_f32", engine="packed"
-    ).collect()
-    assert len(got) == 5
-    tail = {r["vec_id"] for r in got if r["cos_sim"] is None}
-    assert tail == {1, 2}
-
-    # pack_vectors roundtrip: blob bytes == float32 of the source
-    import numpy as np
-    src = {r["vec_id"]: r["embedding"]
-           for r in e.limit(5).collect()}
-    for r in packed.filter(F.col("vec_id") < 5).collect():
-        want = np.asarray(src[r["vec_id"]], dtype="<f4").tobytes()
-        assert bytes(r["emb_f32"]) == want
-
-
-def test_cosine_topk_codegen_engine_identical(spark, sf_dir):
-    """The unrolled literal-query engine (engine="codegen" — straight
-    -line codegen arithmetic, no zip_with/aggregate HOF interpretation)
-    returns exactly the sql engine's rows: same left-to-right IEEE
-    fold order, same HALF_UP rounding, same (cos desc, id asc)
-    tiebreak — on the corpus, under heavy ties, and on ADVERSARIAL
-    rows (NULL vector, NULL element, ragged shorter AND longer,
-    zero-norm), which the size()-guard routes onto the original fold
-    expression so the zip_with NULL-padding semantics are preserved
-    bit-for-bit."""
-    from omicidx_gh_etl_spark.operators import similarity
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    a = similarity.cosine_topk(e, q, k=10, engine="sql").collect()
-    c = similarity.cosine_topk(e, q, k=10, engine="codegen").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-
-    # tie stress: replicated identical vectors under distinct ids
-    ties = e.filter(F.col("vec_id") < 3).selectExpr(
-        "explode(sequence(0, 19)) AS r", "vec_id", "embedding"
-    ).selectExpr("vec_id * 20 + r AS vec_id", "embedding")
-    at = similarity.cosine_topk(ties, q, k=7, engine="sql").collect()
-    ct = similarity.cosine_topk(ties, q, k=7, engine="codegen").collect()
-    assert [tuple(r) for r in at] == [tuple(r) for r in ct]
-
-    # adversarial corpus: every degenerate shape the guard must route
-    # to the fold branch (plus healthy rows that take the unrolled one)
-    qd = [float(x) for x in q.head(1)[0]["qv"]]
-    dims = len(qd)
-    weird = spark.createDataFrame(
-        [
-            (100, qd),                      # exact query copy
-            (101, None),                    # NULL vector
-            (102, qd[: dims - 1]),          # ragged shorter
-            (103, qd + [1.0]),              # ragged longer
-            (104, qd[:-1] + [None]),        # NULL element
-            # NB: an exact zero-norm row raises DIVIDE_BY_ZERO in BOTH
-            # engines (ANSI; same Divide node in the guard's THEN
-            # branch as in the fold) — near-zero exercises the
-            # magnitude extreme without the shared raise
-            (105, [1e-30] * dims),          # near-zero norm
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    aw = similarity.cosine_topk(weird, q, k=6, engine="sql").collect()
-    cw = similarity.cosine_topk(weird, q, k=6, engine="codegen").collect()
-    assert [tuple(r) for r in aw] == [tuple(r) for r in cw]
-
-    # degenerate QUERY vectors fall back to the fold engine: plans and
-    # values must match the sql engine exactly
-    for bad_q in ([None], [[1.0, None] + [0.0] * (dims - 2)]):
-        bq = spark.createDataFrame(
-            [(v,) for v in bad_q], "qv array<double>"
-        )
-        asql = similarity.cosine_topk(weird, bq, k=3, engine="sql").collect()
-        acg = similarity.cosine_topk(
-            weird, bq, k=3, engine="codegen"
-        ).collect()
-        assert [tuple(r) for r in asql] == [tuple(r) for r in acg]
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        similarity.cosine_topk(e, e.limit(2).selectExpr(
-            "embedding AS qv"), engine="codegen").collect()
 
 
 def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
@@ -1234,7 +1122,6 @@ def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
     returns exactly the sql engine's rows, including under ties and a
     non-default block size that forces multi-block batches; the packer
     REJECTS null/ragged vectors (ingest validation, never silent)."""
-    import numpy as np
     import pytest as _pytest
 
     from omicidx_gh_etl_spark.operators import similarity
@@ -1300,13 +1187,7 @@ def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
         similarity.pack_vector_blocks(
             comp, "embedding", "vec_id", dims=2
         ).collect()
-    # pack_vectors must NULL the ragged rows, not mis-pack them
-    got = {r["vec_id"]: r["emb_f32"] for r in similarity.pack_vectors(
-        comp, "embedding", "vec_id", dims=2
-    ).collect()}
-    assert bytes(got[1]) == np.array([1.0, 2.0], dtype="<f4").tobytes()
-    assert got[2] is None and got[3] is None
-    # and the arrow engine must score them as null-cosine, identical
+    # the arrow engine must score them as null-cosine, identical
     # to the sql engine, not shift vectors under wrong ids
     qq = spark.createDataFrame(
         [([1.0, 2.0],)], "qv array<double>"
@@ -1316,25 +1197,6 @@ def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
     b = [tuple(r) for r in similarity.cosine_topk(
         comp, qq, k=3, engine="arrow").collect()]
     assert a == b
-
-
-def test_cosine_topk_blocks_norms_blob_identical(spark, sf_dir):
-    """with_norms=True (ingest-time norms blob + kernel skip of the
-    einsum pass) returns exactly the no-norms and sql results."""
-    from omicidx_gh_etl_spark.operators import similarity
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    want = [tuple(r) for r in
-            similarity.cosine_topk(e, q, k=10, engine="sql").collect()]
-    blocks = similarity.pack_vector_blocks(
-        e, "embedding", "vec_id", block_rows=13, with_norms=True
-    )
-    got = [tuple(r) for r in similarity.cosine_topk_blocks(
-        blocks, q, k=10, norms_col="norms"
-    ).collect()]
-    assert got == want
 
 
 def test_bm25_batch_topk_null_term_dropped(spark, sf_dir):

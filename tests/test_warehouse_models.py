@@ -280,12 +280,18 @@ def test_incremental_rerun_is_idempotent(spark, runner):
     """Dynamic partition overwrite: re-running a window must not
     duplicate rows (sqlmesh re-materialization semantics)."""
     sel = ["bronze.stg_geo_samples"]
-    runner.run(start_ds="2006-08-10", end_ds="2006-08-20", select=sel)
+
+    def rows_affected(results):
+        return {r.model: r.rows_affected for r in results}[sel[0]]
+
+    r1 = runner.run(start_ds="2006-08-10", end_ds="2006-08-20", select=sel)
     n1 = runner.resolve("bronze.stg_geo_samples").count()
     runner._cache.clear()
-    runner.run(start_ds="2006-08-10", end_ds="2006-08-20", select=sel)
+    r2 = runner.run(start_ds="2006-08-10", end_ds="2006-08-20", select=sel)
     n2 = runner.resolve("bronze.stg_geo_samples").count()
     assert n1 == n2 == 3
+    # the observed write count is the interval's row count on both runs
+    assert rows_affected(r1) == rows_affected(r2) == 3
 
 
 # -- geometadb golden tests ------------------------------------------------
@@ -435,6 +441,12 @@ def test_backfill_runs_missing_intervals_and_resumes(spark, runner):
     done = runner.backfill(model, s, e)
     assert len(done) == 3
     assert all(r.status == "success" for _, rs in done for r in rs)
+    # rows_affected per interval, from the observed write: Jan 14 is
+    # empty (no part files written), Jan 15 and Jan 16 hold one each
+    assert {
+        iv.start.isoformat(): {r.model: r.rows_affected for r in rs}[model]
+        for iv, rs in done
+    } == {"2024-01-14": 0, "2024-01-15": 1, "2024-01-16": 1}
 
     # rows materialized across the intervals: SRX2 (Jan 15) + SRX4 (Jan 16)
     accs = {r["experiment_accession"] for r in runner.resolve(model).collect()}
