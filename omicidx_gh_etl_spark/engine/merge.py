@@ -54,13 +54,34 @@ def merge_upsert(
     count. Creates the target if absent.
     """
     target = Path(target_dir)
+    base = None
     if target.exists() and any(target.rglob("*.parquet")):
         # pin the schema so an empty/partial target can't drift it
         base = spark.read.schema(updates.schema).parquet(str(target))
-        combined = base.unionByName(updates)
-    else:
-        combined = updates
+    merged = _latest_versions(base, updates, keys, order_cols, delete_col)
+    return publish_parquet(spark, merged, target)
 
+
+def _latest_versions(
+    base: DataFrame | None,
+    updates: DataFrame,
+    keys: list[str],
+    order_cols: list[str],
+    delete_col: str | None,
+) -> DataFrame:
+    """The one version-resolution plan every merge variant runs:
+    ``base ∪ updates`` → ``max_by(struct(payload), struct(order))`` per
+    key → tombstoned winners dropped (with ``delete_col`` itself).
+    ``base`` may lack update-side columns (a tombstone merge commits
+    WITHOUT ``delete_col``); those are null-filled before the union."""
+    combined = updates
+    if base is not None:
+        for c in updates.columns:
+            if c not in base.columns:
+                base = base.withColumn(
+                    c, F.lit(None).cast(updates.schema[c].dataType)
+                )
+        combined = base.select(*updates.columns).unionByName(updates)
     payload = [c for c in updates.columns if c not in keys]
     merged = (
         combined.groupBy(*keys)
@@ -77,8 +98,7 @@ def merge_upsert(
         merged = merged.filter(
             ~F.coalesce(F.col(delete_col), F.lit(False))
         ).drop(delete_col)
-
-    return publish_parquet(spark, merged, target)
+    return merged
 
 
 def publish_parquet(spark: SparkSession, df: DataFrame, target: Path) -> int:
@@ -125,29 +145,10 @@ def merge_into_snapshot(
     (metadata-only) instead of recomputing, and audits can diff any two
     versions. Returns the committed snapshot.
     """
-    spark = updates.sparkSession
+    base = None
     if table.latest_version() is not None:
-        base = table.read(spark)
-        # a tombstone merge commits WITHOUT delete_col — null-fill any
-        # update-side column the stored snapshot lacks
-        for c in updates.columns:
-            if c not in base.columns:
-                base = base.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
-        combined = base.select(*updates.columns).unionByName(updates)
-    else:
-        combined = updates
-
-    payload = [c for c in updates.columns if c not in keys]
-    merged = (
-        combined.groupBy(*keys)
-        .agg(F.max_by(F.struct(*payload), F.struct(*order_cols)).alias("__winner"))
-        .select(*keys, "__winner.*")
-        .select(*updates.columns)
-    )
-    if delete_col is not None:
-        merged = merged.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-            delete_col
-        )
+        base = table.read(updates.sparkSession)
+    merged = _latest_versions(base, updates, keys, order_cols, delete_col)
     return table.commit_overwrite(
         merged, note=note or f"merge {len(keys)}-key upsert", meta=meta
     )
@@ -179,26 +180,10 @@ def merge_into_snapshot_partitions(
     """
     spark = updates.sparkSession
     affected = [r[0] for r in updates.select(partition_col).distinct().collect()]
+    base = None
     if table.latest_version() is not None:
         base = table.read(spark, partition_filter={partition_col: affected})
-        for c in updates.columns:
-            if c not in base.columns:
-                base = base.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
-        combined = base.select(*updates.columns).unionByName(updates)
-    else:
-        combined = updates
-
-    payload = [c for c in updates.columns if c not in keys]
-    merged = (
-        combined.groupBy(*keys)
-        .agg(F.max_by(F.struct(*payload), F.struct(*order_cols)).alias("__winner"))
-        .select(*keys, "__winner.*")
-        .select(*updates.columns)
-    )
-    if delete_col is not None:
-        merged = merged.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-            delete_col
-        )
+    merged = _latest_versions(base, updates, keys, order_cols, delete_col)
     return table.commit_replace_partitions(
         merged,
         partition_by=partition_col,

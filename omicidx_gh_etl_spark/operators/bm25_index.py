@@ -136,11 +136,25 @@ class Bm25Index:
           exactly in any order, so sum/count is bit-identical to the
           former avg()).
 
+        Precondition: ``id_col`` is unique and non-null. The row count
+        equals :func:`~.text.bm25_build_index`'s distinct ``(id, dl)``
+        count only then, and recovering that count for repeated ids
+        would take a second tokenize pass — so a corpus with repeated
+        or NULL ids raises ``ValueError`` before anything is written.
+
         Measured at the bench shape (2M docs, 256 buckets, interleaved
         A/B): build 35.1 s → 30.6 s first pass, 56.2 s → 27.5 s second
         pass (contended window), with all three table hashes and the
         serve output identical (OPTIMIZATION_r11.md, "Bm25Index.build —
         single-tokenize restructure"; tests pin serve equivalence)."""
+        n_total, n_ids = docs.agg(
+            F.count(F.lit(1)), F.countDistinct(id_col)
+        ).collect()[0]
+        if n_ids != n_total:
+            raise ValueError(
+                f"Bm25Index.build: {id_col!r} must be unique and non-null "
+                f"({n_total} rows, {n_ids} distinct ids)"
+            )
         for t in (self.postings_table, self.dfreq_table, self.stats_table):
             _drop_table_and_location(self.spark, t)
         toks = tokens_sql(f"coalesce(`{text_col}`, '')")
@@ -179,7 +193,6 @@ class Bm25Index:
             num_buckets=n_buckets,
             sort_cols=["term"],
         )
-        n_total = docs.count()
         sum_dl = (
             p.select("doc_id", "__dl").distinct()
             .agg(F.sum("__dl")).collect()[0][0]

@@ -69,14 +69,18 @@ def test_bench_headline_contract_fast(tmp_path):
     # line 2: full detail; with deadline 0 the scale section is skipped
     detail = json.loads(lines[1])
     assert detail["metric"] == "headline_queries_total"
-    assert detail["sections_skipped"] == ["scale"]
+    assert detail["sections_skipped"] == [
+        "serve", "scale", "floor", "extract"
+    ]
     assert detail["scale"].get("skipped"), detail["scale"]
     with open(detail_path) as fh:
         assert json.load(fh) == detail
 
     # last line: the compact contract line the tail-window driver parses
     compact = _assert_compact_contract(lines[-1], 0.001)
-    assert compact["sections_skipped"] == ["scale"]
+    assert compact["sections_skipped"] == [
+        "serve", "scale", "floor", "extract"
+    ]
     tail = proc.stdout[-TAIL_WINDOW:]
     recovered = [
         ln for ln in tail.splitlines()

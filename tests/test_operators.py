@@ -2733,3 +2733,26 @@ def test_bm25_index_persisted_serve_matches_batch_topk(spark, sf_dir):
     finally:
         for t in (idx.postings_table, idx.dfreq_table, idx.stats_table):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_bm25_index_rejects_repeated_doc_ids(spark):
+    """A repeated doc_id makes the one-shot stats (distinct (id, dl)
+    pairs) and the persisted build's row count disagree on n/avgdl, so
+    the build refuses such a corpus with a named error before writing
+    anything — for a repeat with the same length, a different length,
+    and a NULL id alike."""
+    import uuid
+
+    from omicidx_gh_etl_spark.operators.bm25_index import Bm25Index
+
+    name = f"bm25idx_dup_{uuid.uuid4().hex[:8]}"
+    idx = Bm25Index(spark, name)
+    for rows in (
+        [(1, "the cat"), (1, "a dog"), (2, "the end")],
+        [(1, "the cat"), (1, "the cat sat"), (2, "the end")],
+        [(None, "the cat"), (2, "the end")],
+    ):
+        d = spark.createDataFrame(rows, "doc_id long, text string")
+        with pytest.raises(ValueError, match="must be unique and non-null"):
+            idx.build(d, "text", "doc_id", n_buckets=4)
+        assert not spark.catalog.tableExists(idx.stats_table)
